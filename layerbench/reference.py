@@ -58,6 +58,12 @@ class Reference:
         self.post = {t: (np.array(d, np.int64), np.array(tfs_of[t], np.int64))
                      for t, d in docs_of.items()}
         self.df = {t: len(d) for t, (d, _) in self.post.items()}
+        self.live = np.ones(self.n, bool)
+
+    def delete(self, doc_ids) -> None:
+        """Tombstone docs: they leave every answer, but the corpus
+        statistics keep counting them, as in the engine until a purge."""
+        self.live[np.isin(self.doc_ids, list(doc_ids))] = False
 
     # ------------------------------------------------------------ scoring
 
@@ -77,7 +83,7 @@ class Reference:
         return acc, cnt
 
     def _top(self, acc, mask, k):
-        idx = np.flatnonzero(mask)
+        idx = np.flatnonzero(mask & self.live)
         order = np.lexsort((self.doc_ids[idx], -acc[idx]))[:k]
         sel = idx[order]
         return [(int(self.doc_ids[i]), float(acc[i])) for i in sel]
@@ -171,7 +177,8 @@ class Reference:
             mask = cnt > 0
         else:
             _, mask = self._and_mask(seq)
-        vals, counts = np.unique(self.langs[mask], return_counts=True)
+        vals, counts = np.unique(self.langs[mask & self.live],
+                                 return_counts=True)
         return {str(v): int(c) for v, c in zip(vals, counts)}
 
     def mlt_terms(self, doc_id: int, max_terms: int) -> list[str]:

@@ -65,6 +65,7 @@ LAYER_UNITS = {
     "codec.encode_postings_per_s": "1/s",
     "codec.decode_postings_per_s": "1/s",
     "codec.bytes_per_posting": "B",
+    "dictindex.sidecars_s": "s",
     "query.open_ms": "ms",
     "query.plan_ms": "ms",
     "query.collect_ms": "ms",
@@ -77,6 +78,12 @@ LAYER_UNITS = {
     "query.or.p50_ms": "ms",
     "query.est_postings_p50": "count",
     "query.single_task_frac": "frac",
+    "ingest.batch_s": "s",
+    "ingest.merge_s": "s",
+    "ingest.merge.spark_jobs": "count",
+    "ingest.merge.shuffle_write_bytes": "B",
+    "ingest.bytes_written_per_source_byte": "B/B",
+    "maintain.delete.spark_jobs": "count",
     "trace.overhead_frac": "frac",
 }
 
@@ -208,6 +215,18 @@ def calibrate(spark, matmul_s: float = 0.5) -> dict:
     }
 
 
+def _rate(fn, n_items: int, min_s: float = 0.2) -> float:
+    """Items per second of ``fn()``: the median of at least three calls,
+    repeated for at least ``min_s``."""
+    times: list[float] = []
+    t_end = time.perf_counter() + min_s
+    while len(times) < 3 or time.perf_counter() < t_end:
+        t = time.perf_counter()
+        fn()
+        times.append(time.perf_counter() - t)
+    return n_items / median(times)
+
+
 def micro_layers(index_dir: str, seed: int) -> dict:
     """In-process, one-core rates of the tokenizer and the codec, on a
     seeded code sample and on the workload's own postings blocks."""
@@ -220,8 +239,9 @@ def micro_layers(index_dir: str, seed: int) -> dict:
     from datastream_io_spark.operators.codec import (
         decode_block_dls,
         decode_block_docs,
+        decode_block_positions,
         decode_block_tfs,
-        encode_blocks,
+        encode_runs,
     )
 
     texts = pd.Series(corpus_pandas(300, start=seed % 100_000)["content"])
@@ -241,23 +261,43 @@ def micro_layers(index_dir: str, seed: int) -> dict:
                 break
         if n_blocks >= 2000:
             break
-    t = time.perf_counter()
-    decoded = [(np.concatenate([decode_block_docs(b) for b in bl]),
-                np.concatenate([decode_block_tfs(b) for b in bl]),
-                np.concatenate([decode_block_dls(b) for b in bl]))
-               for bl in runs]
-    dec_s = time.perf_counter() - t
-    t = time.perf_counter()
-    for d, tf, dl in decoded:
-        encode_blocks(d, tf, dl)
-    enc_s = time.perf_counter() - t
-    n_post = sum(d.size for d, _, _ in decoded)
+    positional = runs[0][0]["poss"] is not None
+
+    def decode_run(bl):
+        tfs = [decode_block_tfs(b) for b in bl]
+        return (np.concatenate([decode_block_docs(b) for b in bl]),
+                np.concatenate(tfs),
+                np.concatenate([decode_block_dls(b) for b in bl]),
+                np.concatenate([decode_block_positions(b, tf)
+                                for b, tf in zip(bl, tfs)])
+                if positional else None)
+
+    decoded = [decode_run(bl) for bl in runs]
+    n_post = sum(d[0].size for d in decoded)
+    dec_rate = _rate(lambda: [decode_run(bl) for bl in runs], n_post)
+
+    # the build kernel's call: one encode_runs over a batch of runs
+    ends = np.cumsum([d[0].size for d in decoded])
+    starts = ends - np.array([d[0].size for d in decoded])
+    ids, tfs, dls = (np.concatenate([d[i] for d in decoded])
+                     for i in range(3))
+    pos = np.concatenate([d[3] for d in decoded]) if positional else None
+
+    def encode():
+        return encode_runs(ids, tfs, dls, starts, ends, positions=pos)
+
+    enc_rate = _rate(encode, n_post)
+    for d, bl in zip(decoded, encode()):
+        again = decode_run(bl)
+        if not all(np.array_equal(a, b) for a, b in zip(d, again)
+                   if a is not None):
+            raise AssertionError("codec round trip changed a posting run")
     with open(os.path.join(index_dir, "manifest", "merge.json")) as f:
         merge = json.load(f)
     return {
         "tokenize.code_docs_per_s": tok_rate,
-        "codec.encode_postings_per_s": n_post / enc_s,
-        "codec.decode_postings_per_s": n_post / dec_s,
+        "codec.encode_postings_per_s": enc_rate,
+        "codec.decode_postings_per_s": dec_rate,
         "codec.bytes_per_posting": (merge["compressed_bytes"]
                                     / merge["n_postings"]),
     }
@@ -304,8 +344,10 @@ def build_layers(tracer, ncpu: int) -> dict:
     return out
 
 
-def query_layers(tracer, records, gates) -> dict:
-    sp = tracer.spans
+def query_layers(tracer, records, gates, n_spans: int) -> dict:
+    """Layers of the workload's own queries: the first ``n_spans``
+    spans, before the traced run's extra steps."""
+    sp = tracer.spans[:n_spans]
     roots = [i for i, s in enumerate(sp)
              if s.parent is None and s.name.startswith("query.")
              and s.name != "query.open"]
@@ -345,12 +387,34 @@ def query_layers(tracer, records, gates) -> dict:
     return out
 
 
+def write_layers(tracer, written: int, batch_bytes: int) -> dict:
+    """Layers of the traced run's extra steps: the expansion sidecars
+    and the ingest → merge → delete cycle. ``ingest_docs_per_s`` and
+    ``delete_ms`` are printed only: one cycle per run is too few
+    samples to gate them."""
+    from layerbench.workloads import INGEST_BATCH
+
+    idx = {s.name: i for i, s in enumerate(tracer.spans)
+           if s.name in ("dictindex.sidecars", "ingest.batch",
+                         "ingest.merge", "maintain.delete")}
+    dur = {name: tracer.spans[i].duration for name, i in idx.items()}
+    merge = tracer.spark_totals(idx["ingest.merge"])
+    return {
+        "dictindex.sidecars_s": dur["dictindex.sidecars"],
+        "ingest.batch_s": dur["ingest.batch"],
+        "ingest.merge_s": dur["ingest.merge"],
+        "ingest.merge.spark_jobs": merge["jobs"],
+        "ingest.merge.shuffle_write_bytes": merge["shuffle_write_bytes"],
+        "ingest.bytes_written_per_source_byte": written / batch_bytes,
+        "maintain.delete.spark_jobs": tracer.spark_totals(
+            idx["maintain.delete"])["jobs"],
+        "ingest_docs_per_s": INGEST_BATCH / (dur["ingest.batch"]
+                                             + dur["ingest.merge"]),
+        "delete_ms": ms(dur["maintain.delete"]),
+    }
+
+
 # ------------------------------------------------------------- workloads
-
-
-def du(path: str) -> int:
-    return sum(os.path.getsize(os.path.join(d, f))
-               for d, _, fs in os.walk(path) for f in fs)
 
 
 def run_workload(workload: str, seed: int, seconds: float, trace: bool,
@@ -358,6 +422,7 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
     """Set up, run and check one workload; returns the full report."""
     from datastream_io_spark.golden import brute_force_topk
     from datastream_io_spark.operators import build
+    from datastream_io_spark.operators.dictindex import build_term_sidecars
     from datastream_io_spark.session import get_spark
     from layerbench import workloads as W
     from layerbench.reference import Reference, same_topk
@@ -401,10 +466,10 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
 
     if workload == "query_warm":
         n_docs = int(build.read_stats(index_dir)["n_docs"])
-        first, stream, shape = W.warm_ops(seed, n_docs)
+        first, stream, step = W.warm_ops(seed, n_docs)
     else:
-        first, stream, shape = W.hot_ops(seed, sizes)
-    records, loop_s = W.timed_loop(runner, first, stream, shape, seconds)
+        first, stream, step = W.hot_ops(seed, sizes)
+    records, loop_s = W.timed_loop(runner, first, stream, step, seconds)
     rss = peak_rss_mb(spark)
     t_check = time.perf_counter()
 
@@ -426,6 +491,24 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
     single_frac = sum(g[1] for g in gates) / len(gates)
     want_frac = 1.0 if workload == "query_warm" else 0.0
     gate_ok = single_frac == want_frac
+    attempted = len(records) + 1  # every query plus the build
+    index_bytes = W.du(index_dir)
+    check_s = time.perf_counter() - t_check
+
+    if trace:
+        # span bookkeeping ÷ wall time, over set-up and the loop
+        overhead = tracer.overhead_s / (t_check - t_setup)
+        n_spans = len(tracer.spans)
+        # steps only the traced run takes: the expansion sidecars on the
+        # workload's index, then writes beside reads on a streaming index
+        with tracer.span("dictindex.sidecars"):
+            build_term_sidecars(spark, index_dir)
+        written, batch_bytes, ingested, exp = W.ingest_cycle(
+            spark, tracer, work, seed)
+        failed += [r for r, e in zip(ingested, exp)
+                   if not W.matches(r.op, r.result, e)]
+        attempted += 4 + len(ingested)  # sidecars, ingest, merge, delete
+        info["ingest_queries_checked"] = len(ingested)
 
     timed = [r for r in records if r.timed]
     warm = [r.latency_s for r in timed]
@@ -433,12 +516,11 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
     e2e = {
         "setup_s": setup_s,
         "build_files_per_s": len(corpus) / build_s,
-        "index_bytes_per_source_byte": du(index_dir) / src_bytes,
+        "index_bytes_per_source_byte": index_bytes / src_bytes,
         "query_p50_ms": ms(median(warm)),
         "queries_per_s": len(timed) / loop_s,
         "cold_query_ms": ms(median(cold)),
     }
-    attempted = len(records) + 1  # every query plus the build
     info.update({
         "peak_rss_mb": rss,
         "error_rate": len(failed) / attempted,
@@ -450,7 +532,7 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
         "est_postings_max": max(g[0] for g in gates),
         "session.get_spark_s": get_spark_s,
         "build_s": build_s,
-        "check_s": time.perf_counter() - t_check,
+        "check_s": check_s,
         **calib,
     })
     batch = [r.latency_s for r in timed if r.op.kind == "batch"]
@@ -468,8 +550,9 @@ def run_workload(workload: str, seed: int, seconds: float, trace: bool,
         layers.update({"session.get_spark_s": get_spark_s, **calib})
         layers.update(build_layers(tracer, ncpu))
         layers.update(micro_layers(index_dir, seed))
-        layers.update(query_layers(tracer, records, gates))
-        layers["trace.overhead_frac"] = tracer.overhead_s / loop_s
+        layers.update(query_layers(tracer, records, gates, n_spans))
+        layers.update(write_layers(tracer, written, batch_bytes))
+        layers["trace.overhead_frac"] = overhead
 
     for r in failed:
         print(f"MISMATCH {r.op.kind} {r.op.q!r}: got {r.result!r}",

@@ -113,6 +113,20 @@ def test_reference_matches_golden_brute_force(mode):
         assert same_topk(ref.ranked(q, 10, mode), gold), (q, mode)
 
 
+def test_deleted_docs_leave_answers_but_keep_statistics():
+    corpus = W.code_corpus(80, seed=5)
+    docs = corpus.reset_index().rename(
+        columns={"index": "doc_id", "content": "text"})
+    ref = Reference(docs[["doc_id", "text", "lang"]], "code")
+    before = ref.ranked("parse config", 10, "or")
+    ref.delete([before[0][0]])
+    after = ref.ranked("parse config", 10, "or")
+    assert before[0][0] not in [d for d, _ in after]
+    # the survivors keep their scores: idf and avgdl still count the
+    # deleted doc, as the engine's do until a purge
+    assert after[:len(before) - 1] == before[1:len(after) + 1]
+
+
 def test_wrong_answers_do_not_match():
     exp = [(3, 1.5), (7, 1.25)]
     assert same_topk(exp, exp)

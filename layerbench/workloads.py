@@ -6,9 +6,9 @@ sent when the previous ``.collect()`` has returned.
 * ``query_warm`` — a code corpus index (``corpus_pandas``, code
   tokenizer, positional). A seeded mix of and / or / phrase / near /
   wildcard / fuzzy / regex / boolean / facet / more-like-this /
-  ``search_many`` calls on one warm ``Searcher``; queries repeat along
-  a Zipf law, so some reuse the warm plan cache. Every query's Σdf is
-  below the single-task gate.
+  ``search_many`` calls on one warm ``Searcher``, one call of each kind
+  per cycle. Queries repeat along a Zipf law, so some reuse the warm
+  plan cache. Every query's Σdf is below the single-task gate.
 * ``query_hot`` — short documents over a small, heavily skewed
   vocabulary, sized so every query's Σdf is above the single-task gate:
   the distributed per-split WAND, its shuffle and the global cut run on
@@ -72,15 +72,21 @@ WARM_BOOLEAN = ["(parse OR merge) AND config",
                 "(query OR terms) AND (postings OR block)",
                 "return AND (nil OR err) NOT self",
                 '"merge segments" OR "flush segment"']
-# call mix of the warm loop (kind → weight)
-WARM_MIX = {"and": 3, "or": 2, "phrase": 1, "near": 1, "wildcard": 1,
-            "fuzzy": 1, "regex": 1, "boolean": 1, "facet": 1, "mlt": 1,
-            "batch": 1}
+# the warm loop's cycle: one call of each kind, in seeded order. No
+# traffic trace exists to weight the kinds, so none is weighted.
+WARM_KINDS = ("and", "or", "phrase", "near", "wildcard", "fuzzy", "regex",
+              "boolean", "facet", "mlt", "batch")
+# Each kind draws from its own pool along a Zipf law, so queries
+# repeat and reach the plan cache. Both numbers are assumptions, not
+# taken from a trace. With them the first query of a pool gets about
+# 44% of its kind's calls, and the last gets the clipped tail, 26%.
 WARM_POOL = 6  # distinct queries per kind
+ZIPF_A = 1.6
 # one call per distinct plan shape warms the JVM before timing: every
 # ranked mode shares the single-task WAND plan of "and"
 WARM_UP = ("and", "facet", "mlt", "batch")
-N_COLD = {"query_warm": 2, "query_hot": 2}
+# cold calls per run, each a new Searcher and its first "and" query
+N_COLD = 3
 
 
 @dataclass
@@ -143,7 +149,7 @@ def write_corpus(pdf: pd.DataFrame, path: str) -> int:
 
 
 def _zipf_pick(rng, pool: list):
-    return pool[min(int(rng.zipf(1.6)) - 1, len(pool) - 1)]
+    return pool[min(int(rng.zipf(ZIPF_A)) - 1, len(pool) - 1)]
 
 
 def warm_ops(seed: int, n_docs: int):
@@ -172,7 +178,6 @@ def warm_ops(seed: int, n_docs: int):
         "batch": [{f"q{j}": words_q(2, 3) for j in range(4)}
                   for _ in range(WARM_POOL)],
     }
-    kinds = [k for k, w in WARM_MIX.items() for _ in range(w)]
 
     def make(kind, cold=False):
         q = _zipf_pick(rng, pools[kind])
@@ -180,21 +185,18 @@ def warm_ops(seed: int, n_docs: int):
             return Op(kind, q[0], mode=q[1], cold=cold)
         return Op(kind, q, cold=cold)
 
-    cold = [make("and", cold=True) for _ in range(N_COLD["query_warm"])]
+    cold = [make("and", cold=True) for _ in range(N_COLD)]
     warm_up = [make(k) for k in WARM_UP]
 
     def stream():
-        # the weighted mix as a fixed cycle in seeded order, so every
-        # run sends the same share of each kind
-        cycle = [str(k) for k in rng.permutation(kinds)]
+        cycle = [str(k) for k in rng.permutation(WARM_KINDS)]
         i = 0
         while True:
             yield make(cycle[i % len(cycle)])
             i += 1
 
-    # the loop runs whole cycles, so every run times every kind in the
-    # same proportion
-    return cold + warm_up, stream(), (len(kinds), len(kinds))
+    # the loop runs whole cycles, so every run times every kind equally
+    return cold + warm_up, stream(), len(WARM_KINDS)
 
 
 def hot_ops(seed: int, sizes: Sizes):
@@ -202,8 +204,7 @@ def hot_ops(seed: int, sizes: Sizes):
     rng = np.random.default_rng(seed + 2)
     seen: set = set()
 
-    def op(i, cold=False):
-        mode = ("and", "or")[i % 2]
+    def op(mode, cold=False):
         while True:
             terms = tuple(sorted(rng.choice(
                 sizes.hot_terms, sizes.hot_query_terms,
@@ -213,17 +214,16 @@ def hot_ops(seed: int, sizes: Sizes):
                 return Op(mode, " ".join(f"hot{t}" for t in terms),
                           cold=cold)
 
-    cold = [op(i, cold=True) for i in range(N_COLD["query_hot"])]
+    cold = [op("and", cold=True) for _ in range(N_COLD)]
 
     def stream():
-        i = 0
         while True:
-            yield op(i)
-            i += 1
+            yield op("and")
+            yield op("or")
 
     # the loop ends on whole and/or pairs, so its median always mixes
     # the two modes in the same proportion
-    return cold, stream(), (2, 2)
+    return cold, stream(), 2
 
 
 # ------------------------------------------------------------- execution
@@ -293,11 +293,9 @@ def _result(op: Op, rows):
     return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
 
-def timed_loop(runner: Runner, first, stream, shape, seconds: float):
+def timed_loop(runner: Runner, first, stream, step: int, seconds: float):
     """The cold and warm-up calls, then the closed loop for
-    ``seconds``; ``shape`` = (step, least): the loop stops on a multiple
-    of ``step`` calls and after at least ``least`` calls."""
-    step, least = shape
+    ``seconds``; the loop stops on a whole multiple of ``step`` calls."""
     records = [runner.run(op, timed=False) for op in first]
     t0 = time.perf_counter()
     deadline = t0 + seconds
@@ -305,10 +303,70 @@ def timed_loop(runner: Runner, first, stream, shape, seconds: float):
     while True:
         records.append(runner.run(next(stream), timed=True))
         n += 1
-        if (n % step == 0 and n >= least
-                and time.perf_counter() >= deadline):
+        if n % step == 0 and time.perf_counter() >= deadline:
             break
     return records, time.perf_counter() - t0
+
+
+# ---------------------------------------------------- traced ingest cycle
+
+INGEST_BASE = 300  # docs of the streaming index the cycle starts from
+INGEST_BATCH = 100  # docs the cycle ingests and merges
+INGEST_QUERIES = 4  # checked queries after the delete, and/or alternating
+INGEST_RANDOM_DELETES = 4
+
+
+def ingest_cycle(spark, tracer, work: str, seed: int):
+    """Writes beside reads, for the traced run: a small streaming code
+    index, then one ``ingest_batch`` → ``merge_stream_batches`` →
+    ``delete_docs`` cycle, then queries through a fresh ``Searcher``.
+    Deleted ids are seeded: the reference's top hit of each query plus
+    a few random docs, so a tombstone that leaks shows in the answers.
+    Returns (bytes the ingest and merge wrote, content bytes of the
+    batch, records, expected answers from the live docs)."""
+    from datastream_io_spark.streaming.incremental import (
+        finalize_stream_index,
+        ingest_batch,
+        merge_stream_batches,
+    )
+    from layerbench.reference import Reference
+
+    corpus = code_corpus(INGEST_BASE + INGEST_BATCH, seed + 3)
+    base, batch = corpus.iloc[:INGEST_BASE], corpus.iloc[INGEST_BASE:]
+    idx = os.path.join(work, "stream_index")
+    ingest_batch(spark, spark.createDataFrame(base), 0, idx)
+    finalize_stream_index(spark, idx)
+    before = du(idx)
+    with tracer.span("ingest.batch"):
+        ingest_batch(spark, spark.createDataFrame(batch), 1, idx)
+    with tracer.span("ingest.merge"):
+        merge_stream_batches(spark, idx)
+    written = du(idx) - before
+
+    ref = Reference(docs_with_text(idx, corpus), "code")
+    rng = np.random.default_rng(seed + 4)
+    words = WARM_WORDS + WARM_IDENTS
+    ops = [Op(("and", "or")[i % 2],
+              " ".join(words[j] for j in rng.choice(len(words), 2,
+                                                     replace=False)))
+           for i in range(INGEST_QUERIES)]
+    tops = [ref.ranked(op.q, K, op.kind) for op in ops]
+    doomed = {top[0][0] for top in tops if top}
+    doomed |= {int(d) for d in rng.choice(ref.doc_ids,
+                                          INGEST_RANDOM_DELETES,
+                                          replace=False)}
+    with tracer.span("maintain.delete"):
+        indexed_search.delete_docs(spark, idx, doc_ids=sorted(doomed))
+    ref.delete(doomed)
+    runner = Runner(spark, idx, tracer)
+    records = [runner.run(op, timed=False) for op in ops]
+    return (written, int(batch["content"].str.len().sum()), records,
+            [expected(ref, op) for op in ops])
+
+
+def du(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, fs in os.walk(path) for f in fs)
 
 
 # ----------------------------------------------------------------- checks
