@@ -17,6 +17,7 @@ from __future__ import annotations
 import math
 import re
 from collections import Counter
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -45,18 +46,21 @@ class Reference:
         self.doc_ids = docs["doc_id"].to_numpy(np.int64)
         self.langs = docs["lang"].to_numpy()
         self.toks = [self.pure(t) for t in docs["text"]]
-        self.n = len(self.toks)
-        dl_int = [len(t) for t in self.toks]
-        self.dl = np.array(dl_int, np.float64)
-        self.avgdl = sum(dl_int) / self.n
-        docs_of: dict[str, list[int]] = {}
-        tfs_of: dict[str, list[int]] = {}
-        for i, toks in enumerate(self.toks):
-            for t, c in Counter(toks).items():
-                docs_of.setdefault(t, []).append(i)
-                tfs_of.setdefault(t, []).append(c)
-        self.post = {t: (np.array(d, np.int64), np.array(tfs_of[t], np.int64))
-                     for t, d in docs_of.items()}
+        self.n = n = len(self.toks)
+        lens = np.fromiter(map(len, self.toks), np.int64, n)
+        self.dl = lens.astype(np.float64)
+        self.avgdl = int(lens.sum()) / n
+        # postings: (term, doc) pairs counted, grouped by term, docs
+        # ascending within each term
+        codes, terms = pd.factorize(pd.Series(
+            list(chain.from_iterable(self.toks)), dtype=object))
+        pairs, tf = np.unique(codes.astype(np.int64) * n
+                              + np.repeat(np.arange(n), lens),
+                              return_counts=True)
+        code, doc = np.divmod(pairs, n)
+        cuts = np.flatnonzero(np.diff(code)) + 1
+        self.post = {terms[code[a]]: (doc[a:b], tf[a:b])
+                     for a, b in zip(np.r_[0, cuts], np.r_[cuts, len(code)])}
         self.df = {t: len(d) for t, (d, _) in self.post.items()}
         self.live = np.ones(self.n, bool)
 

@@ -140,7 +140,7 @@ def test_wrong_answers_do_not_match():
 # ------------------------------------------------------------------- CLI
 
 
-def test_refuses_gate_and_warmup_overrides(monkeypatch, capsys):
+def test_refuses_gate_override(monkeypatch, capsys):
     for var in R.REFUSED_ENV:
         monkeypatch.setenv(var, "1")
         assert R.main(["--workload", "query_warm", "--seed", "1",

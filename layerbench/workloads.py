@@ -83,10 +83,18 @@ WARM_KINDS = ("and", "or", "phrase", "near", "wildcard", "fuzzy", "regex",
 WARM_POOL = 6  # distinct queries per kind
 ZIPF_A = 1.6
 # one call per distinct plan shape warms the JVM before timing: every
-# ranked mode shares the single-task WAND plan of "and"
-WARM_UP = ("and", "facet", "mlt", "batch")
-# cold calls per run, each a new Searcher and its first "and" query
-N_COLD = 3
+# ranked mode shares the single-task WAND plan of "and", which the cold
+# calls have already run
+WARM_UP = ("facet", "mlt", "batch")
+# the timed loop runs at least this many whole steps (cycles or and/or
+# pairs). A query_warm run with one cycle gets almost no plan-cache hits,
+# since the pools start cold, so with fewer cycles the hit share, and the
+# median, would depend on how fast the host was during the run.
+MIN_STEPS = 2
+# cold calls per run, each a new Searcher and its first "and" query;
+# the first of them also compiles the rank plan, so the median needs
+# several more
+N_COLD = 5
 
 
 @dataclass
@@ -295,7 +303,8 @@ def _result(op: Op, rows):
 
 def timed_loop(runner: Runner, first, stream, step: int, seconds: float):
     """The cold and warm-up calls, then the closed loop for
-    ``seconds``; the loop stops on a whole multiple of ``step`` calls."""
+    ``seconds``; the loop stops on a whole multiple of ``step`` calls,
+    and not before ``MIN_STEPS`` of them."""
     records = [runner.run(op, timed=False) for op in first]
     t0 = time.perf_counter()
     deadline = t0 + seconds
@@ -303,7 +312,8 @@ def timed_loop(runner: Runner, first, stream, step: int, seconds: float):
     while True:
         records.append(runner.run(next(stream), timed=True))
         n += 1
-        if n % step == 0 and time.perf_counter() >= deadline:
+        if (n % step == 0 and n >= MIN_STEPS * step
+                and time.perf_counter() >= deadline):
             break
     return records, time.perf_counter() - t0
 
